@@ -119,8 +119,9 @@ def snapshot_diff(
         )
     value_cols = [c for c in old.columns if c not in key_columns]
 
-    o = old.withColumn("__h", row_hash_expr(value_cols)).alias("o")
-    n = new.withColumn("__h", row_hash_expr(value_cols)).alias("n")
+    row_hash = row_hash_expr(value_cols)  # unbound: one build serves both sides
+    o = old.withColumn("__h", row_hash).alias("o")
+    n = new.withColumn("__h", row_hash).alias("n")
     joined = o.join(n, on=key_columns, how="full_outer")
     o_exists = F.col("o.__h").isNotNull()
     n_exists = F.col("n.__h").isNotNull()

@@ -15,6 +15,13 @@ def row_count_guard(df: DataFrame, limit: int) -> int:
     Returns the observed count (driver-side int; this is a deliberate
     action, same as the reference's ``count(*)`` pre-scan).
 
+    ``run_sync`` does not call this: it counts the rows of its own
+    staged write and discards that write when the count is over
+    ``validate_row_count``, so a passing sync executes its source plan
+    once. This operator is the standalone pre-check, for callers that
+    want to refuse before writing anything: it costs a second execution
+    of ``df``, bounded by the limit.
+
     Scale note: unlike the reference — which always runs a full
     ``count(*)`` over the *base table* — this guard counts
     ``df.limit(limit + 1)``, so Spark stops scanning once the limit is

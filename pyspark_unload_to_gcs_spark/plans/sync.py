@@ -12,7 +12,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from pyspark_unload_to_gcs_spark.config import SyncConfig, SyncResult, SyncType
 from pyspark_unload_to_gcs_spark.operators.cdc import (
@@ -24,10 +25,18 @@ from pyspark_unload_to_gcs_spark.operators.filters import (
     non_null_filter,
     time_window_filter,
 )
-from pyspark_unload_to_gcs_spark.operators.guards import row_count_guard
+from pyspark_unload_to_gcs_spark.operators.guards import RowCountExceededError
+
+# run_sync no longer calls it; kept here because perfbench/trace.py
+# patches plans.sync.row_count_guard
+from pyspark_unload_to_gcs_spark.operators.guards import row_count_guard  # noqa: F401
 from pyspark_unload_to_gcs_spark.operators.hashing import content_hash
 from pyspark_unload_to_gcs_spark.operators.scd import latest_per_group
-from pyspark_unload_to_gcs_spark.sinks.writers import write_export
+from pyspark_unload_to_gcs_spark.sinks.writers import (
+    publish_staged,
+    staging_dir,
+    write_export,
+)
 from pyspark_unload_to_gcs_spark.sources.catalog import (
     current_timestamp_ms,
     custom_sql_source,
@@ -178,35 +187,69 @@ def _plan_cdc(spark: SparkSession, config: SyncConfig) -> PlannedSync:
 
 
 def run_sync(spark: SparkSession, config: SyncConfig) -> SyncResult:
-    """Full pipeline: guard -> plan -> hash -> write -> checkpoint
-    (the reference's ``__main__`` flow, export.py:325-337)."""
+    """Full pipeline: plan -> hash -> staged write -> guard -> publish ->
+    manifest -> checkpoint (the reference's ``__main__`` flow,
+    export.py:325-337).
+
+    The source plan executes exactly once. The write goes to a hidden
+    ``_staging-<uuid>`` child of ``output_uri`` (``sinks.staging_dir``),
+    and an ``Observation`` on that same execution counts its rows. Then:
+
+    - over ``validate_row_count``: the staged files are deleted and
+      ``RowCountExceededError`` is raised. The guard costs one discarded
+      staged write, not a separate bounded count (``row_count_guard``,
+      still a public operator, is that second execution). The previous
+      export, its manifest and the caller's watermark are untouched;
+    - a failed write (any task error) is handled the same way;
+    - otherwise ``publish_staged`` swaps the staged files in and, with
+      ``emit_manifest``, the manifest is written last. The watermark is
+      returned only after both.
+
+    A crash while publishing leaves no manifest, and no watermark was
+    returned, so the orchestrator re-runs the same window. What a
+    consumer sees in each crash window:
+
+    - during the staged write: the previous export and manifest, intact;
+      the orphaned ``_staging-*`` dir is hidden and the next publish
+      removes it;
+    - after the old manifest is deleted, while old files are deleted and
+      staged ones moved up: no manifest, and a mix of old, new or no
+      files. Consumers that ``validate_manifest`` do not ingest;
+    - after the move, before the new manifest lands: the new files, no
+      manifest yet.
+
+    On local and HDFS paths each move is a rename; on object stores it
+    is a per-object copy, so that window grows with the export's size.
+    Consumers that read without the manifest see a partial directory
+    only during the publish, where Spark's in-place overwrite exposed
+    one for the whole write job.
+
+    Deliberate divergence from the reference: it counts the BASE TABLE
+    before planning (export.py:38 — a second full scan, and a limit on
+    the wrong quantity for filtered syncs); this guards the planned
+    result, which is what actually gets exported.
+    """
     planned = plan_sync(spark, config)
-    if config.validate_row_count > 0:
-        # Deliberate divergence: the reference counts the BASE TABLE
-        # before planning (export.py:38 — a second full scan, and a
-        # limit on the wrong quantity for filtered syncs); we guard the
-        # planned result, which is what actually gets exported.
-        row_count_guard(planned.df, config.validate_row_count)
     df = content_hash(
         planned.df, config.computed_hash_column, config.computed_hash_ignore_columns
     )
-    # Row count piggybacked on the write itself via an Observation —
-    # exported-row accounting with NO second scan (the reference's guard
-    # does a full pre-count; export.py:38).
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    uri = write_export(df, config)
-    rows_written = obs.get["rows"]
+    with staging_dir(config.output_uri) as staging:
+        write_export(df, config, path=staging)
+        rows_written = obs.get["rows"]
+        if 0 < config.validate_row_count < rows_written:
+            raise RowCountExceededError(
+                f"Row count {rows_written} exceeds limit {config.validate_row_count}"
+            )
+        publish_staged(staging, config.output_uri)
     if config.emit_manifest:
         from pyspark_unload_to_gcs_spark.sinks.writers import write_manifest
 
-        write_manifest(uri, row_count=rows_written)
+        write_manifest(config.output_uri, row_count=rows_written)
     return SyncResult(
         plan_description=planned.description,
         change_capture_sync_last_commit_ms=planned.change_capture_sync_last_commit_ms,
         rows_written=rows_written,
-        output_uri=uri,
+        output_uri=config.output_uri,
     )

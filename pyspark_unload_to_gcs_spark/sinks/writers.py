@@ -17,7 +17,9 @@ Scale posture vs the reference:
 
 from __future__ import annotations
 
+import contextlib
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,7 +80,6 @@ def compact_files(
       writers (same constraint every table-format-less compactor has).
     """
     import shutil
-    import uuid
 
     def _rewrite(n_files: int, out_uri: str) -> None:
         df = spark.read.format(format).load(path)
@@ -186,8 +187,10 @@ def write_bucketed_table(
     )
 
 
-def write_export(df: DataFrame, config: SyncConfig) -> str:
-    """Write ``df`` per the sync config; returns the output URI.
+def write_export(df: DataFrame, config: SyncConfig, *, path: str = "") -> str:
+    """Write ``df`` per the sync config to ``path`` (default
+    ``config.output_uri``); returns the URI written. ``run_sync`` passes
+    a ``staging_dir`` child here and publishes it afterwards.
 
     Mirrors reference write semantics: mode=overwrite, gzip compression,
     optional maxRecordsPerFile, CSV gets a header row. (We do not
@@ -196,6 +199,7 @@ def write_export(df: DataFrame, config: SyncConfig) -> str:
     """
     if not config.output_uri:
         raise ValueError("output_uri is required")
+    path = path or config.output_uri
     fmt = ExportFormat(config.export_format)
 
     if fmt == ExportFormat.CSV:
@@ -233,8 +237,8 @@ def write_export(df: DataFrame, config: SyncConfig) -> str:
         writer = writer.option("maxRecordsPerFile", config.max_records_per_file)
     if fmt == ExportFormat.CSV:
         writer = writer.option("header", "true")
-    writer.save(config.output_uri)
-    return config.output_uri
+    writer.save(path)
+    return path
 
 
 def clustered_frame(
@@ -348,19 +352,68 @@ def write_zordered(
 
 
 MANIFEST_NAME = "_MANIFEST.json"
+STAGING_PREFIX = "_staging-"
 
 
-def _manifest_fs(output_uri: str):
+def _hadoop_fs(output_uri: str):
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
     if spark is None:
-        raise RuntimeError("manifest: no active SparkSession")
+        raise RuntimeError(f"{output_uri}: no active SparkSession")
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     path = jvm.org.apache.hadoop.fs.Path(output_uri)
     fs = path.getFileSystem(hconf)
     return jvm, fs, path
+
+
+@contextlib.contextmanager
+def staging_dir(output_uri: str):
+    """Yield the URI of a fresh hidden ``_staging-<uuid>`` child of
+    ``output_uri``, and remove that directory on exit, whatever
+    happened. Spark readers, the manifest and ``validate_manifest`` all
+    skip ``_``-prefixed names, so a staging dir left by a crash is
+    invisible and the next ``publish_staged`` removes it. A child, not
+    a sibling, so a bucket-root ``output_uri`` works too."""
+    if not output_uri:
+        raise ValueError("output_uri is required")
+    jvm, fs, root = _hadoop_fs(output_uri)
+    staging = jvm.org.apache.hadoop.fs.Path(root, f"{STAGING_PREFIX}{uuid.uuid4().hex}")
+    try:
+        yield staging.toString()
+    finally:
+        fs.delete(staging, True)
+
+
+def publish_staged(staging_uri: str, output_uri: str) -> None:
+    """Replace the export under ``output_uri`` with the files staged in
+    its child ``staging_uri``, through the Hadoop FileSystem API:
+
+    1. delete the old ``_MANIFEST.json``, so no consumer validates
+       against it from here on;
+    2. delete every other child except the staging dir (the old
+       export, and stale ``_staging-*`` dirs of crashed syncs);
+    3. move each staged child up, then remove the staging dir.
+
+    The caller writes the new manifest afterwards. Step 2 also removes
+    a concurrent sync's staging dir, so an ``output_uri`` has one
+    writer at a time, as with Spark's own overwrite. Each move is a
+    rename: atomic per child on local and HDFS file systems, a
+    per-object copy plus delete on object stores (gs://, s3a://), where
+    step 3 takes time proportional to the export's size."""
+    jvm, fs, root = _hadoop_fs(output_uri)
+    Path = jvm.org.apache.hadoop.fs.Path
+    staging = Path(staging_uri)
+    fs.delete(Path(root, MANIFEST_NAME), False)
+    for st in fs.listStatus(root):
+        if st.getPath().getName() != staging.getName():
+            fs.delete(st.getPath(), True)
+    for st in fs.listStatus(staging):
+        child = st.getPath()
+        if not fs.rename(child, Path(root, child.getName())):
+            raise IOError(f"publish_staged: could not move {child.toString()} to {output_uri}")
+    fs.delete(staging, True)
 
 
 def _iter_data_files(fs, path):
@@ -407,7 +460,7 @@ def write_manifest(output_uri: str, *, row_count: int | None = None) -> dict:
     dict."""
     import json
 
-    jvm, fs, path = _manifest_fs(output_uri)
+    jvm, fs, path = _hadoop_fs(output_uri)
     entries = []
     for rel, st in _iter_data_files(fs, path):
         entries.append(
@@ -451,7 +504,7 @@ def validate_manifest(output_uri: str) -> dict:
     (review finding)."""
     import json
 
-    jvm, fs, path = _manifest_fs(output_uri)
+    jvm, fs, path = _hadoop_fs(output_uri)
     mpath = jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
     if not fs.exists(mpath):
         raise ValueError(f"validate_manifest: no {MANIFEST_NAME} under {output_uri}")

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import glob
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -141,12 +142,15 @@ def custom_sql_source(
 
 
 def current_timestamp_ms(spark: SparkSession) -> int:
-    """End-of-window probe (reference S5, export.py:63-67)."""
-    from pyspark_unload_to_gcs_spark.timeutil import datetime_to_ms
-    from datetime import timezone
+    """End-of-window clock (reference S5, export.py:63-67), epoch ms.
 
-    now = spark.sql("SELECT current_timestamp()").first()[0]
-    return datetime_to_ms(now.replace(tzinfo=timezone.utc))
+    The reference runs ``SELECT current_timestamp()``, a Spark job that
+    reads the driver host's clock. This reads the same clock in-process,
+    truncated to ms, and launches no job. It is true epoch ms whatever
+    the host's timezone (a collected ``current_timestamp()`` is a naive
+    local-time datetime; tagging it as UTC would shift it by the host's
+    UTC offset). ``spark`` is kept for call-site compatibility."""
+    return time.time_ns() // 1_000_000
 
 
 def load_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:

@@ -11,7 +11,8 @@ the SEMANTICS runtime evidence on the format Spark always has:
 - layout: ``<path>/v=<N>/`` parquet snapshot dirs (committed iff the
   ``_SUCCESS`` marker exists — same torn-write gate as the streaming
   versioned state, streaming/rollup.py) + an atomically-replaced
-  ``_commits.json`` ledger mapping version -> commit epoch ms, with a
+  ``_commits.json`` ledger mapping version -> commit epoch ms (plus the
+  version's row count and Spark schema; see ``_resolve_schemas``), with a
   create-if-absent ``_commits.lock`` CAS serializing writers; all
   ledger/layout I/O goes through the JVM Hadoop FileSystem API, so
   any URI scheme the cluster can write (``file:``/``hdfs:``/``gs:``/
@@ -44,6 +45,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pyspark_unload_to_gcs_spark.operators.cdc import (
     EXPORT_CHANGE_TYPE_COLUMN,
@@ -269,16 +271,44 @@ def _committed_versions(path: str) -> list[int]:
             and os.path.exists(os.path.join(d, "_SUCCESS"))
         )
     jvm, _gw, fs, _root = handle
-    stats = fs.globStatus(jvm.org.apache.hadoop.fs.Path(_sub(path, "v=*")))
+    # one glob for the markers themselves, not an exists() per version
+    stats = fs.globStatus(jvm.org.apache.hadoop.fs.Path(_sub(path, "v=*/_SUCCESS")))
     if stats is None:
         return []
-    out = []
-    for s in stats:
-        p = s.getPath()
-        m = _VERSION_RE.search(str(p.getName()))
-        if m and fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")):
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return sorted(
+        int(m.group(1))
+        for s in stats
+        if (m := _VERSION_RE.search(str(s.getPath().toString()).rsplit("/", 2)[-2]))
+    )
+
+
+def _resolve_schemas(ledger: list[dict]) -> list[dict]:
+    """Ledger entries sorted by version, each ``schema`` filled in.
+
+    On disk an entry records its schema JSON only when it differs from
+    the previous entry's; an unchanged one stores ``"schema": null``,
+    read as "the previous entry's". An entry without the key (written
+    before the field existed) has no schema, and readers infer it."""
+    out, prev = [], None
+    for e in sorted(ledger, key=lambda e: e["version"]):
+        if "schema" in e and e["schema"] is None:
+            e = {**e, "schema": prev}
+        out.append(e)
+        prev = e.get("schema")
+    return out
+
+
+def _compact_schemas(ledger: list[dict]) -> list[dict]:
+    """Inverse of ``_resolve_schemas`` for a version-sorted, resolved
+    ledger: the on-disk form, where a schema equal to the previous
+    entry's is stored as null. A wide table's ledger then grows by one
+    schema per schema change, not per version."""
+    out, prev = [], None
+    for e in ledger:
+        schema = e.get("schema")
+        out.append({**e, "schema": None} if schema is not None and schema == prev else e)
+        prev = schema
+    return out
 
 
 def table_history(path: str) -> list[dict]:
@@ -287,14 +317,14 @@ def table_history(path: str) -> list[dict]:
     carries a ``_SUCCESS`` marker AND whose ledger entry exists count
     (the ledger is written after the data, so a crash between the two
     leaves an orphaned dir that is simply invisible, never a torn
-    commit)."""
+    commit). Each entry's ``schema`` is resolved (``_resolve_schemas``)."""
     text = _read_text(_sub(path, _COMMITS_FILE))
     if text is None:
         return []
-    ledger = json.loads(text)
+    ledger = _resolve_schemas(json.loads(text))
     committed = set(_committed_versions(path))
     rows = [e for e in ledger if e["version"] in committed]
-    return sorted(rows, key=lambda e: -e["version"])
+    return rows[::-1]
 
 
 def commit_version(df: DataFrame, path: str, commit_ms: int) -> int:
@@ -330,21 +360,24 @@ def commit_version(df: DataFrame, path: str, commit_ms: int) -> int:
         # scan — never a recompute of df's lineage), recorded in the
         # ledger so stream consumers can classify empty commits without
         # launching one isEmpty() job per pending version on every
-        # rowless micro-batch (ADVICE r11). Older ledgers lack the
-        # field; readers treat it as optional.
-        n_rows = int(df.sparkSession.read.parquet(out_dir).count())
-        ledger = sorted(
-            [dict(e) for e in history]
-            + [
-                {
-                    "version": version,
-                    "commit_ms": int(commit_ms),
-                    "n_rows": n_rows,
-                }
-            ],
-            key=lambda e: e["version"],
+        # rowless micro-batch (ADVICE r11). The same read-back's schema
+        # is recorded too, so readers pin it instead of running one
+        # schema-inference job per version read (stored only when it
+        # changes; ``_compact_schemas``). Older ledgers lack either
+        # field; readers treat both as optional.
+        written = df.sparkSession.read.parquet(out_dir)
+        n_rows = int(written.count())
+        ledger = history[::-1] + [
+            {
+                "version": version,
+                "commit_ms": int(commit_ms),
+                "n_rows": n_rows,
+                "schema": written.schema.json(),
+            }
+        ]
+        _replace_text_atomic(
+            _sub(path, _COMMITS_FILE), json.dumps(_compact_schemas(ledger))
         )
-        _replace_text_atomic(_sub(path, _COMMITS_FILE), json.dumps(ledger))
         return version
     finally:
         fs.delete(lock, False)
@@ -358,8 +391,17 @@ def latest_commit_timestamp_ms(path: str) -> int:
     return history[0]["commit_ms"]
 
 
-def _read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
-    return spark.read.parquet(_sub(path, f"v={version}"))
+def _read_version(
+    spark: SparkSession, path: str, version: int, schema: str | None = None
+) -> DataFrame:
+    """One version's snapshot. ``schema`` is the JSON its ledger entry
+    recorded at commit time: given, the read skips Spark's
+    schema-inference job; ledgers written before the field existed
+    fall back to inference."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema)))
+    return reader.parquet(_sub(path, f"v={version}"))
 
 
 def snapshot_at_ms(spark: SparkSession, path: str, ts_ms: int) -> DataFrame:
@@ -372,7 +414,9 @@ def snapshot_at_ms(spark: SparkSession, path: str, ts_ms: int) -> DataFrame:
         raise ValueError(
             f"snapshot_at_ms: {ts_ms} precedes the first commit of {path!r}"
         )
-    return _read_version(spark, path, eligible[0]["version"])
+    return _read_version(
+        spark, path, eligible[0]["version"], eligible[0].get("schema")
+    )
 
 
 def change_feed(
@@ -394,14 +438,29 @@ def change_feed(
     in_window = [e for e in history if start_ms <= e["commit_ms"] <= end_ms]
     if not history:
         raise ValueError(f"versioned table at {path!r} has no commits")
+    by_version = {e["version"]: e for e in history}
+    latest = history[-1]
+    frames: dict[int, DataFrame] = {}
+
+    def read(version: int) -> DataFrame:
+        # each version is read once, however many diffs it enters
+        if version not in frames:
+            frames[version] = _read_version(
+                spark, path, version, by_version[version].get("schema")
+            )
+        return frames[version]
+
     # schema evolution: the feed's schema is the LATEST version's (the
     # table's current shape); older snapshots align by adding typed
     # NULL columns. An unchanged row that merely gained a NULL column
     # hashes identically on both sides of the diff, so evolution alone
     # emits no spurious change rows.
-    template = _read_version(spark, path, history[-1]["version"])
-
-    def _aligned(df: DataFrame) -> DataFrame:
+    def aligned(version: int) -> DataFrame:
+        df = read(version)
+        recorded = by_version[version].get("schema")
+        if recorded is not None and recorded == latest.get("schema"):
+            return df  # same recorded shape as the latest: nothing to align
+        template = read(latest["version"])
         cols = []
         for f in template.schema.fields:
             if f.name in df.columns:
@@ -417,15 +476,18 @@ def change_feed(
             )
         return df.select(*cols)
 
-    empty = template.limit(0)
-    if not in_window:
-        return (
-            snapshot_diff(empty, empty, key_columns)
-            .withColumn("_commit_version", F.lit(None).cast("long"))
-            .withColumn("_commit_timestamp", F.lit(None).cast("long"))
+    def stamped(diff: DataFrame, version, commit_ms) -> DataFrame:
+        return diff.withColumns(
+            {
+                "_commit_version": F.lit(version).cast("long"),
+                "_commit_timestamp": F.lit(commit_ms).cast("long"),
+            }
         )
+
+    if not in_window:
+        empty = read(latest["version"]).limit(0)
+        return stamped(snapshot_diff(empty, empty, key_columns), None, None)
     parts = []
-    by_version = {e["version"]: e for e in history}
     for e in in_window:
         if e["version"] > 0 and e["version"] - 1 not in by_version:
             # The predecessor was vacuumed: diffing against empty would
@@ -443,15 +505,16 @@ def change_feed(
                 "predecessor survives, or re-sync from a full snapshot."
             )
         prev = (
-            _aligned(_read_version(spark, path, e["version"] - 1))
-            if e["version"] - 1 in by_version
-            else empty
+            aligned(e["version"] - 1)
+            if e["version"] > 0
+            else read(latest["version"]).limit(0)
         )
-        cur = _aligned(_read_version(spark, path, e["version"]))
         parts.append(
-            snapshot_diff(prev, cur, key_columns)
-            .withColumn("_commit_version", F.lit(e["version"]).cast("long"))
-            .withColumn("_commit_timestamp", F.lit(e["commit_ms"]).cast("long"))
+            stamped(
+                snapshot_diff(prev, aligned(e["version"]), key_columns),
+                e["version"],
+                e["commit_ms"],
+            )
         )
     out = parts[0]
     for p in parts[1:]:
@@ -492,13 +555,13 @@ def vacuum(path: str, *, keep_last: int) -> list[int]:
         drop = sorted(e["version"] for e in history if e["version"] not in keep)
         if not drop:
             return []
-        ledger = sorted(
-            # dict(e), not a field whitelist: surviving entries keep
-            # their optional n_rows stat (ADVICE r11)
-            (dict(e) for e in history if e["version"] in keep),
-            key=lambda e: e["version"],
+        # whole entries, not a field whitelist: surviving entries keep
+        # their optional n_rows stat (ADVICE r11) and schema, which
+        # compaction re-records in full on the oldest survivor
+        ledger = [e for e in history[::-1] if e["version"] in keep]
+        _replace_text_atomic(
+            _sub(path, _COMMITS_FILE), json.dumps(_compact_schemas(ledger))
         )
-        _replace_text_atomic(_sub(path, _COMMITS_FILE), json.dumps(ledger))
         for v in drop:
             fs.delete(jvm.org.apache.hadoop.fs.Path(_sub(path, f"v={v}")), True)
         return drop

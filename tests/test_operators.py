@@ -1986,3 +1986,21 @@ def test_threshold_sweep_plan_is_one_aggregate(spark):
     )
     assert plan.count("Scan ") <= 1
     assert "Join" not in plan
+
+
+# --- the window clock ---------------------------------------------------------
+
+
+def test_current_timestamp_ms_matches_spark_clock(spark):
+    """The in-process window clock agrees with Spark's
+    current_timestamp() to within a second, whatever the host's
+    timezone (unix_millis reads the instant, not a local datetime).
+    Spark fixes current_timestamp() while it plans the query, which on
+    a cold session can take over a second, so the query is bracketed
+    by two reads of ours."""
+    from pyspark_unload_to_gcs_spark.sources.catalog import current_timestamp_ms
+
+    before = current_timestamp_ms(spark)
+    theirs = spark.sql("SELECT unix_millis(current_timestamp())").first()[0]
+    after = current_timestamp_ms(spark)
+    assert before - 1000 < theirs < after + 1000, (before, theirs, after)

@@ -419,3 +419,228 @@ def test_cdc_sync_end_to_end_on_versioned_table(spark, tmp_path):
         ).validate()
     with pytest.raises(ValueError, match="table_format"):
         SyncConfig(table=table, table_format="iceberg").validate()
+
+
+# --- staged publish: the guard and failures leave the previous export -------
+
+
+def _tree_bytes(root) -> dict:
+    """Every file under ``root`` (Hadoop .crc side files excepted), by
+    relative path, with its bytes."""
+    import os
+
+    out = {}
+    for dp, _dirs, files in os.walk(root):
+        for f in files:
+            if f.endswith(".crc"):
+                continue
+            p = os.path.join(dp, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def _staging_left(root) -> list:
+    return glob.glob(f"{root}/**/_staging-*", recursive=True)
+
+
+def _small_source(spark, n: int = 200):
+    from pyspark.sql import functions as F
+
+    return spark.range(n).select(
+        F.col("id").cast("int").alias("k"),
+        (F.col("id") % 3).cast("string").alias("bucket"),
+        (F.col("id") * 0.5).alias("v"),
+    )
+
+
+def _published(spark, tmp_path, name: str = "prev") -> tuple[str, str, dict]:
+    """A small export with a manifest, published by run_sync."""
+    from pyspark_unload_to_gcs_spark.sinks.writers import validate_manifest
+
+    src = str(tmp_path / f"{name}_src.parquet")
+    _small_source(spark).write.mode("overwrite").parquet(src)
+    out_dir = str(tmp_path / name)
+    uri = f"file:{out_dir}"
+    res = run_sync(spark, SyncConfig(table=src, output_uri=uri, emit_manifest=True))
+    assert res.rows_written == 200
+    validate_manifest(uri)
+    return uri, out_dir, _tree_bytes(out_dir)
+
+
+def test_over_limit_sync_keeps_previous_export(spark, tmp_path):
+    """An over-limit sync discards its staged write: the previous files
+    and manifest stay byte-identical and still validate, and no
+    _staging-* dir is left behind."""
+    from pyspark_unload_to_gcs_spark.operators.guards import RowCountExceededError
+    from pyspark_unload_to_gcs_spark.sinks.writers import validate_manifest
+
+    uri, out_dir, before = _published(spark, tmp_path)
+    bigger = str(tmp_path / "bigger.parquet")
+    _small_source(spark, 300).write.parquet(bigger)
+    with pytest.raises(RowCountExceededError, match="300 exceeds limit 250"):
+        run_sync(
+            spark,
+            SyncConfig(table=bigger, output_uri=uri, validate_row_count=250, emit_manifest=True),
+        )
+    assert _tree_bytes(out_dir) == before
+    assert validate_manifest(uri)["row_count"] == 200
+    assert _staging_left(out_dir) == []
+
+    # at or under the limit, the same sync publishes
+    res = run_sync(
+        spark,
+        SyncConfig(table=bigger, output_uri=uri, validate_row_count=300, emit_manifest=True),
+    )
+    assert res.rows_written == 300
+    assert validate_manifest(uri)["row_count"] == 300
+    assert _staging_left(out_dir) == []
+
+
+def test_failed_write_keeps_previous_export(spark, tmp_path):
+    """A write that fails mid-job (one row raises inside the write's
+    tasks) leaves the previous export exactly as the over-limit guard
+    does."""
+    from pyspark.sql import functions as F
+
+    from pyspark_unload_to_gcs_spark.sinks.writers import validate_manifest
+
+    uri, out_dir, before = _published(spark, tmp_path)
+    _small_source(spark).withColumn(
+        "boom",
+        F.when(F.col("k") == 150, F.raise_error(F.lit("injected write failure"))).otherwise(
+            F.lit(0)
+        ),
+    ).createOrReplaceTempView("failing_export_src")
+    with pytest.raises(Exception, match="injected write failure"):
+        run_sync(spark, SyncConfig(table="failing_export_src", output_uri=uri, emit_manifest=True))
+    assert _tree_bytes(out_dir) == before
+    assert validate_manifest(uri)["row_count"] == 200
+    assert _staging_left(out_dir) == []
+
+
+def test_publish_partitioned_and_root_style_uri(spark, tmp_path):
+    """A partition_by export replaces a flat one (partition dirs are
+    moved up whole), a stale _staging-* dir from a crashed sync is
+    removed, and a ``file:///dir/`` URI publishes into the directory
+    itself, not next to it."""
+    import os
+
+    from pyspark_unload_to_gcs_spark.sinks.writers import validate_manifest
+
+    uri, out_dir, _before = _published(spark, tmp_path)
+    os.makedirs(f"{out_dir}/_staging-crashed")
+    src = str(tmp_path / "prev_src.parquet")
+    res = run_sync(
+        spark,
+        SyncConfig(table=src, output_uri=uri, partition_by=("bucket",), emit_manifest=True),
+    )
+    assert res.rows_written == 200
+    assert sorted(f for f in os.listdir(out_dir) if not f.endswith(".crc")) == [
+        "_MANIFEST.json",
+        "_SUCCESS",
+        "bucket=0",
+        "bucket=1",
+        "bucket=2",
+    ]
+    assert glob.glob(f"{out_dir}/bucket=0/*.json.gz")
+    assert validate_manifest(uri)["row_count"] == 200
+    assert spark.read.json(out_dir).count() == 200
+
+    root_style = f"file://{tmp_path}/root_style/"
+    res = run_sync(spark, SyncConfig(table=src, output_uri=root_style, emit_manifest=True))
+    assert res.output_uri == root_style
+    assert glob.glob(f"{tmp_path}/root_style/*.json.gz")
+    assert validate_manifest(root_style)["row_count"] == 200
+    assert validate_manifest(f"file:{tmp_path}/root_style")["row_count"] == 200
+    assert _staging_left(str(tmp_path)) == []
+
+
+# --- one Spark execution per sync ---------------------------------------------
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, read from the status store's jobs list
+    (``SparkStatusTracker.getJobIdsForGroup`` filters
+    ``statusStore().jobsList`` by job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sync_job_budget(spark, tmp_path):
+    """The second run_sync of each config launches only the jobs of its
+    one source execution, plus one parquet schema inference for a plain
+    parquet source: no guard count, no clock query. Incremental CDC on
+    a versioned table (schemas pinned from the ledger): the two sides
+    of the snapshot diff plus the write; time-based: inference plus the
+    write; scd-latest: inference, its shuffle plus the write."""
+    from pyspark.sql import functions as F
+
+    from pyspark_unload_to_gcs_spark.sources.versioned import commit_version
+
+    table = str(tmp_path / "vt")
+    base = _small_source(spark)
+    commit_version(base, table, 1_000)
+    events = str(tmp_path / "events.parquet")
+    base.withColumn("ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("k"))).write.parquet(
+        events
+    )
+
+    def cdc(watermark: int) -> SyncConfig:
+        return SyncConfig(
+            table=table,
+            sync_type=SyncType.CDC,
+            table_format="versioned",
+            cdc_key_columns=("k",),
+            time_cutoff_ms=watermark,
+            validate_row_count=10_000,
+            computed_hash_column="row_hash",
+            output_uri=f"file:{tmp_path}/cdc",
+            emit_manifest=True,
+        )
+
+    watermark = run_sync(spark, cdc(0)).change_capture_sync_last_commit_ms
+    jobs = []
+    for i in range(2):
+        commit_version(
+            base.withColumn("v", F.col("v") + F.when(F.col("k") % 50 == 0, i + 1).otherwise(0)),
+            table,
+            watermark + 1,
+        )
+        box = {}
+        jobs.append(_jobs_started(spark, lambda: box.update(r=run_sync(spark, cdc(watermark)))))
+        assert box["r"].rows_written == 8  # 4 updated keys: preimage + postimage
+        watermark = box["r"].change_capture_sync_last_commit_ms
+    assert jobs[1] <= 3, jobs
+
+    time_based = SyncConfig(
+        table=events,
+        sync_type=SyncType.TIME_BASED,
+        updated_time_column="ts",
+        time_cutoff_ms=1_700_000_000_000,
+        now_ms=1_700_000_100_000,
+        output_uri=f"file:{tmp_path}/time",
+        emit_manifest=True,
+    )
+    scd = SyncConfig(
+        table=events,
+        sync_type=SyncType.SCD_LATEST,
+        group_id_column="bucket",
+        scd_time_column="ts",
+        output_uri=f"file:{tmp_path}/scd",
+        emit_manifest=True,
+    )
+    for config, budget in ((time_based, 2), (scd, 3)):
+        run_sync(spark, config)
+        got = _jobs_started(spark, lambda c=config: run_sync(spark, c))
+        assert got <= budget, (config.sync_type, got)
+    assert _jobs_started(spark, lambda: run_sync(spark, time_based)) == 2

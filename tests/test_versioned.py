@@ -998,3 +998,91 @@ def test_cdf_merge_stream_races_concurrent_committer(spark, tmp_path):
         (1, 11.0),
         (2, 20.0),
     }
+
+
+def test_ledger_schema_pins_version_reads(spark, tmp_path):
+    """commit_version records each version's schema in its ledger entry
+    next to n_rows; a read pinned to it equals Spark's inferred read
+    (decimal and timestamp columns included) and launches no job."""
+    import datetime
+    import decimal
+    import json
+
+    from pyspark_unload_to_gcs_spark.sources import versioned as V
+
+    path = str(tmp_path / "t")
+    rows = [
+        (1, decimal.Decimal("12.34"), datetime.datetime(2024, 1, 2, 3, 4, 5, 678000)),
+        (2, None, None),
+    ]
+    commit_version(spark.createDataFrame(rows, "k int, amt decimal(12,2), ts timestamp"), path, 100)
+    entry = table_history(path)[0]
+    assert entry["n_rows"] == 2
+    recorded = json.loads(entry["schema"])
+    assert [f["type"] for f in recorded["fields"]] == ["integer", "decimal(12,2)", "timestamp"]
+
+    inferred = spark.read.parquet(os.path.join(path, "v=0"))
+    sc = spark.sparkContext
+    before = sc.statusTracker().getJobIdsForGroup(None)
+    pinned = V._read_version(spark, path, 0, entry["schema"])
+    assert pinned.schema == inferred.schema
+    assert sc.statusTracker().getJobIdsForGroup(None) == before  # no inference job
+    assert sorted(pinned.collect()) == sorted(inferred.collect())
+    assert snapshot_at_ms(spark, path, 100).schema == inferred.schema
+
+
+def test_ledger_without_schema_still_reads(spark, table):
+    """Ledgers written before the schema field existed fall back to
+    schema inference for snapshots and the change feed."""
+    import json
+
+    ledger_path = os.path.join(table, "_commits.json")
+    with open(ledger_path) as f:
+        ledger = json.load(f)
+    assert all("schema" in e for e in ledger)
+    with open(ledger_path, "w") as f:
+        json.dump([{k: v for k, v in e.items() if k != "schema"} for e in ledger], f)
+    os.remove(os.path.join(table, "._commits.json.crc"))  # stale after the rewrite
+    assert all("schema" not in e for e in table_history(table))
+
+    assert sorted(tuple(r) for r in snapshot_at_ms(spark, table, 250).collect()) == [
+        (1, 11.0),
+        (2, 20.0),
+        (3, 30.0),
+    ]
+    feed = change_feed(spark, table, 101, 300, key_columns=["k"]).collect()
+    assert {(r["_mp_change_type"], r["k"], r["_commit_version"]) for r in feed} == {
+        ("DELETE", 1, 1),
+        ("INSERT", 1, 1),
+        ("INSERT", 3, 1),
+        ("DELETE", 1, 2),
+    }
+
+
+def test_ledger_records_schema_only_on_change(spark, tmp_path):
+    """The ledger stores a version's schema only when it differs from
+    the previous version's (null otherwise); table_history resolves
+    every entry, and vacuum re-records the full schema on the oldest
+    survivor."""
+    import json
+
+    from pyspark_unload_to_gcs_spark.sources.versioned import vacuum
+
+    path = str(tmp_path / "t")
+    a = spark.createDataFrame([(1, 1.0)], "k int, v double")
+    b = spark.createDataFrame([(1, 1.0, "x")], "k int, v double, s string")
+    for i, df in enumerate((a, a, b, b)):
+        commit_version(df, path, 100 + i)
+
+    def raw() -> list:
+        with open(os.path.join(path, "_commits.json")) as f:
+            return [e["schema"] for e in json.load(f)]
+
+    resolved = {e["version"]: e["schema"] for e in table_history(path)}
+    assert resolved[0] == resolved[1] == a.schema.json()
+    assert resolved[2] == resolved[3] == b.schema.json()
+    assert raw() == [a.schema.json(), None, b.schema.json(), None]
+
+    assert vacuum(path, keep_last=1) == [0, 1, 2]
+    assert raw() == [b.schema.json()]
+    assert snapshot_at_ms(spark, path, 103).columns == ["k", "v", "s"]
